@@ -155,40 +155,6 @@ def test_extract_html_turns_stable_ordering(spark):
         assert [t for _, t in seqs] == sorted(t for _, t in seqs)
 
 
-def test_html_extract_stream_matches_batch(spark, tmp_path):
-    """Stateless extractor under Structured Streaming == batch, row for
-    row (one definition, two arrival modes)."""
-    from sparkextract.streaming import html_extract_stream
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = str(tmp_path / "src_docs")
-    docs.repartition(3).write.parquet(src)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        html_extract_stream(stream)
-        .writeStream.format("memory")
-        .queryName("html_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_html"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r.doc_id: (r.main_text, r.n_blocks, r.kept_blocks, r.removed_chars)
-        for r in spark.sql("SELECT * FROM html_stream_out").collect()
-    }
-    want = {
-        r.doc_id: (r.main_text, r.n_blocks, r.kept_blocks, r.removed_chars)
-        for r in H.html_main_content(H.documents_as_html(docs)).collect()
-    }
-    assert got == want
-
-
 def test_main_text_contains_no_markup(spark, hdf):
     rows = H.html_main_content(hdf).limit(50).collect()
     assert rows
