@@ -12,9 +12,13 @@ vs the staged pipeline's ~6 exchanges. Same golden-equality guarantee:
 tests/test_e2e_golden.py pins BOTH paths to tests/oracle.py. Use the
 staged path to study operators relationally; use this to run 10^12 turns.
 
-Batch internals are numpy end-to-end: one lexsort per batch to group
-(turn, page) and array slices into the turn kernel — per-turn pandas
-frames cost more than the extraction itself at this granularity.
+Batch internals: one Arrow batch is one parse call and one call of the
+batch kernel (turnkernel.run_turn_arrays), which extracts every turn of
+the batch together — one lexsort gives the turn and page segments, and
+F1, OCR containment, the J1 fill and the O1 order each run once over the
+whole batch; only the sequential folds (OCR bubble/line/mask folds per
+region, paragraph assembly per block) run per group. Per-turn or
+per-page calls would cost more in numpy dispatch than the extraction.
 """
 
 from __future__ import annotations
@@ -34,59 +38,25 @@ from .turnkernel import run_turn_arrays
 
 def _extract_batch(batch: pd.DataFrame) -> pd.DataFrame:
     dets = _parse_batch(batch)
-    f1_cache: dict = {}  # per-batch F1 memo (see run_turn_arrays)
-    out_conv: list = []
-    out_turn: list = []
-    out_text: list = []
-    out_spans: list = []
-    if not dets.empty:
-        conv = dets["conv_id"].to_numpy(object)
-        turn = dets["turn_idx"].to_numpy(np.int64)
-        pseq = dets["page_seq"].to_numpy(np.int64)
-        pno = dets["page_no"].to_numpy(np.int64)
-        branch = dets["branch"].to_numpy(np.int64)
-        dord = dets["det_order"].to_numpy(np.int64)
-        didx = dets["det_idx"].to_numpy(np.int64)
-        cat = dets["category"].to_numpy(object)
-        score = dets["score"].to_numpy(np.float64)
-        boxes = dets[["x0", "y0", "x1", "y1"]].to_numpy(np.float64)
-        content = dets["content"].to_numpy(object)
-
-        # group rows by turn: one stable lexsort per batch
-        order = np.lexsort((pseq, turn, conv))
-        key_conv, key_turn = conv[order], turn[order]
-        newturn = np.flatnonzero(
-            np.r_[True, (key_conv[1:] != key_conv[:-1]) | (key_turn[1:] != key_turn[:-1])]
-        )
-        bounds = np.r_[newturn, len(order)]
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            sel = order[s:e]
-            markers = sel[branch[sel] == -1]
-            page_list = [(int(pno[i]), int(pseq[i])) for i in markers]
-            det_sel = sel[branch[sel] >= 0]
-            main_text, spans = run_turn_arrays(
-                page_list,
-                pseq[det_sel], branch[det_sel], dord[det_sel], cat[det_sel],
-                score[det_sel], boxes[det_sel], content[det_sel],
-                didx[det_sel],
-                f1_cache=f1_cache,
-            )
-            out_conv.append(key_conv[s])
-            out_turn.append(int(key_turn[s]))
-            out_text.append(main_text)
-            out_spans.append(
-                [
-                    {"type": sp[0], "x0": sp[1], "y0": sp[2], "x1": sp[3],
-                     "y1": sp[4], "content": sp[5], "score": sp[6]}
-                    for sp in spans
-                ]
-            )
+    conv, turn, text, spans = run_turn_arrays(
+        dets["conv_id"].to_numpy(object),
+        dets["turn_idx"].to_numpy(np.int64),
+        dets["page_no"].to_numpy(np.int64),
+        dets["page_seq"].to_numpy(np.int64),
+        dets["branch"].to_numpy(np.int64),
+        dets["det_order"].to_numpy(np.int64),
+        dets["det_idx"].to_numpy(np.int64),
+        dets["category"].to_numpy(object),
+        dets["score"].to_numpy(np.float64),
+        dets[["x0", "y0", "x1", "y1"]].to_numpy(np.float64),
+        dets["content"].to_numpy(object),
+    )
     return pd.DataFrame(
         {
-            "conv_id": pd.Series(out_conv, dtype=object),
-            "turn_idx": pd.Series(out_turn, dtype="int32"),
-            "main_text": pd.Series(out_text, dtype=object),
-            "spans": pd.Series(out_spans, dtype=object),
+            "conv_id": pd.Series(conv, dtype=object),
+            "turn_idx": pd.Series(turn, dtype="int32"),
+            "main_text": pd.Series(text, dtype=object),
+            "spans": pd.Series(spans, dtype=object),
         }
     )
 

@@ -5,6 +5,8 @@ These are the sequential-fold pieces that are *not* relational
 interval subtraction, and byte-exact paragraph assembly. Each runs on a
 single page's (or block's) handful of boxes inside mapInPandas /
 applyInPandas — per-group cardinality is tiny, total work is linear.
+``segment_pairs`` is the batch-wide counterpart: it lays out the
+same-page pairs that the containment and fill tests compare.
 
 Semantics are pinned in DESIGN.md with reference file:line citations.
 """
@@ -51,6 +53,22 @@ def is_zh(s: str) -> bool:
 
 # ---------- geometry kernels (vectorized) ----------
 
+def segment_pairs(a_seg: np.ndarray, b_seg: np.ndarray,
+                  n_seg: int) -> tuple[np.ndarray, np.ndarray]:
+    """All (i, j) with ``a_seg[i] == b_seg[j]``, i-major and j ascending.
+
+    ``b_seg`` must be sorted (each segment's b rows contiguous). Only
+    same-segment pairs are built — the sum of per-segment products, never
+    a len(a) × len(b) matrix — from per-segment counts with ``np.repeat``."""
+    b_cnt = np.bincount(b_seg, minlength=n_seg)
+    b_start = np.cumsum(b_cnt) - b_cnt
+    reps = b_cnt[a_seg]
+    run_start = np.cumsum(reps) - reps
+    ia = np.repeat(np.arange(len(a_seg)), reps)
+    ib = np.repeat(b_start[a_seg] - run_start, reps) + np.arange(len(ia))
+    return ia, ib
+
+
 def nms_keep(boxes: np.ndarray, order: np.ndarray, iou_thres: float) -> np.ndarray:
     """M3 greedy NMS. ``order`` = candidate indices pre-sorted by
     (score DESC, det_idx ASC); suppress IoU > iou_thres. Returns kept indices
@@ -90,22 +108,19 @@ def nms_keep(boxes: np.ndarray, order: np.ndarray, iou_thres: float) -> np.ndarr
     return np.asarray(kept, dtype=np.int64)
 
 
-def bubble_pass(bs: np.ndarray) -> np.ndarray:
+def bubble_pass(rows: list) -> list[int]:
     """O2 (paddle_ocr.py:57-78): stable (y0,x0) sort + 10px adjacent-swap
-    pass. Input (n,4) bboxes; returns row order as an index array.
-    Internals run on Python floats — identical IEEE doubles, ~3× less
-    dispatch overhead than numpy scalar indexing on these tiny groups."""
-    n = len(bs)
-    rows = bs.tolist()
-    idx = sorted(range(n), key=lambda i: (rows[i][1], rows[i][0]))  # stable
-    for i in range(n - 1):
+    pass over [x0,y0,x1,y1] rows of Python floats (identical IEEE doubles,
+    no numpy dispatch per compare); returns the row order."""
+    idx = sorted(range(len(rows)), key=lambda i: (rows[i][1], rows[i][0]))  # stable
+    for i in range(len(rows) - 1):
         for j in range(i, -1, -1):
             a, b = idx[j], idx[j + 1]
             if abs(rows[b][1] - rows[a][1]) < 10 and rows[b][0] < rows[a][0]:
                 idx[j], idx[j + 1] = b, a
             else:
                 break
-    return np.asarray(idx, dtype=np.int64)
+    return idx
 
 
 def y_overlap_gt(b1, b2, thr=0.8) -> bool:
@@ -122,13 +137,11 @@ def y_overlap_gt(b1, b2, thr=0.8) -> bool:
     return ov / den > thr
 
 
-def merge_det_boxes(bs: np.ndarray) -> np.ndarray:
+def merge_det_boxes(rows: list) -> list[list[float]]:
     """O7 (paddle_ocr.py:250-289): y-sessionize into lines (O3 fold) then
-    union x-touching boxes per line (O6 fold). Input/output (n,4);
-    internals on Python floats (see bubble_pass)."""
-    if len(bs) == 0:
-        return bs.reshape(0, 4)
-    rows = bs.tolist()
+    union x-touching boxes per line (O6 fold), on Python-float rows."""
+    if not rows:
+        return []
     order = sorted(range(len(rows)), key=lambda i: rows[i][1])  # stable
     lines: list[list[int]] = [[order[0]]]
     for i in order[1:]:
@@ -150,7 +163,7 @@ def merge_det_boxes(bs: np.ndarray) -> np.ndarray:
                 out.append(cur)
                 cur = [b[0], b[1], b[2], b[3]]
         out.append(cur)
-    return np.asarray(out, dtype=np.float64).reshape(-1, 4)
+    return out
 
 
 def subtract_intervals(lo: float, hi: float, masks: list[tuple[float, float]]):
@@ -174,17 +187,17 @@ def subtract_intervals(lo: float, hi: float, masks: list[tuple[float, float]]):
     return out
 
 
-def split_by_masks(bs: np.ndarray, masks: np.ndarray) -> np.ndarray:
+def split_by_masks(rows: list, masks: list) -> list:
     """J2 (paddle_ocr.py:156-172): subtract x-intervals of y-overlapping
-    formula masks from each text box."""
-    if len(masks) == 0:
-        return bs
+    formula masks from each text box, on Python-float rows."""
+    if not masks:
+        return rows
     out = []
-    for b in bs:
+    for b in rows:
         xiv = [(m[0], m[2]) for m in masks if y_overlap_gt(b, m)]
         for lo, hi in subtract_intervals(b[0], b[2], xiv):
-            out.append((lo, b[1], hi, b[3]))
-    return np.asarray(out, dtype=np.float64).reshape(-1, 4)
+            out.append([lo, b[1], hi, b[3]])
+    return out
 
 
 # ---------- paragraph assembly (A2) ----------

@@ -3,10 +3,12 @@
 The reference runs OCR per cropped layout region with formula masks
 (pdf2markdown.py:195-256 + paddle_ocr.py:388-450). The det-box geometry
 pipeline — (y0,x0) sort + 10px bubble pass (O2), line merge (O7), formula
-mask x-interval subtraction (J2) — is a sequential fold, so it lives in a
-numpy kernel (``ocr_page_arrays``) called from an ``applyInPandas`` per
-(conv_id, turn_idx, page_seq) group in the staged pipeline, and directly
-from the fused turn kernel. One implementation, two call sites.
+mask x-interval subtraction (J2) — is a sequential fold per region; the
+containment tests around it are not. ``ocr_page_arrays`` runs both for
+many pages at once: region×raw and box×raw containment over same-page
+pair arrays, the folds per region. The staged pipeline calls it once per
+``applyInPandas`` group, the fused batch kernel once per Arrow batch.
+One implementation, two call sites.
 
 Output: the final ``text`` span rows, with ``det_order`` continuing after
 the page's model detections — the reference's layout_dets append order
@@ -23,7 +25,6 @@ from pyspark.sql import functions as F
 from . import kernels, schema
 
 _PAD = float(schema.OCR_PAD)
-_SHIFT4 = np.array([1.0, 1.0, 1.0, 1.0])
 
 ROT_MARK = "@rot180 "
 
@@ -39,88 +40,127 @@ def angle_cls(contents: list[str]) -> list[str]:
     ]
 
 
+def _seq_segment_sum(vals: np.ndarray, starts: np.ndarray,
+                     counts: np.ndarray) -> np.ndarray:
+    """Left-to-right float sum of each segment ``vals[s:s+c]`` — the
+    reference's ``sum()`` to the last bit (``np.add.reduceat`` and
+    ``np.mean`` may sum pairwise). One vector step per segment position:
+    segments sorted longest first, so step k adds to a prefix."""
+    order = np.argsort(-counts, kind="stable")
+    cnt, st = counts[order], starts[order]
+    acc = np.zeros(len(counts))
+    for k in range(int(cnt[0]) if len(cnt) else 0):
+        n = int(np.searchsorted(-cnt, -k, side="left"))  # segments longer than k
+        acc[:n] += vals[st[:n] + k]
+    out = np.empty(len(counts))
+    out[order] = acc
+    return out
+
+
 def ocr_page_arrays(
-    region_boxes: np.ndarray,  # (n,4) OCR-able regions in det_order
-    masks: np.ndarray,  # (m,4) formula masks (int coords as float)
-    raw_boxes: np.ndarray,  # (r,4) raw text dets in det_idx order
+    region_boxes: np.ndarray,  # (n,4) OCR-able regions, by page then det_order
+    masks: np.ndarray,  # (m,4) formula masks (int coords as float), by page
+    raw_boxes: np.ndarray,  # (r,4) raw text dets, by page then det_idx
     raw_scores: np.ndarray,  # (r,)
-    raw_contents: list[str],
+    raw_contents,  # r strings
     use_angle_cls: bool = True,
-) -> tuple[list, list, list]:
-    """→ (boxes [x0,y0,x1,y1], scores, contents) in emission order."""
-    out_boxes: list = []
-    out_scores: list = []
-    out_contents: list = []
+    region_page: np.ndarray | None = None,  # page id per row; omitted = one page
+    mask_page: np.ndarray | None = None,
+    raw_page: np.ndarray | None = None,
+) -> tuple[np.ndarray, list, list, np.ndarray]:
+    """OCR merge for every page of a batch in one pass →
+    (boxes (k,4) [x0,y0,x1,y1], scores, contents, page ids), in emission
+    order: by page, region, then merged line box.
+
+    Centre containment (region × raw) and the ``cons`` step (merged box ×
+    region raw: centre containment, (centre_x, det_idx) order,
+    sequential-sum mean score, ``DROP_SCORE`` cut) run over same-page pair
+    arrays; only the sequential folds — bubble pass, line merge, mask
+    split — run per region."""
+    def pages(seg, n):
+        return np.zeros(n, np.int64) if seg is None else np.asarray(seg, np.int64)
+
+    region_page = pages(region_page, len(region_boxes))
+    mask_page = pages(mask_page, len(masks))
+    raw_page = pages(raw_page, len(raw_boxes))
+    none = (np.empty((0, 4)), [], [], np.empty(0, np.int64))
     if len(raw_boxes) == 0 or len(region_boxes) == 0:
-        return out_boxes, out_scores, out_contents
+        return none
+    n_pages = int(max(region_page.max(), raw_page.max(),
+                      mask_page.max() if len(mask_page) else 0)) + 1
+    contents = list(raw_contents)
     if use_angle_cls:
-        raw_contents = angle_cls(raw_contents)
-    rcx = (raw_boxes[:, 0] + raw_boxes[:, 2]) / 2.0
-    rcy = (raw_boxes[:, 1] + raw_boxes[:, 3]) / 2.0
-    # sequential-sum score mean: matches the reference's sum()/len() to the
-    # last bit (np.mean switches to pairwise summation above 8 elements)
-    # and skips numpy dispatch overhead on these 1-5 element groups
-    scores_list = raw_scores.tolist()
-    # center containment on Python floats for the usual handful of raw
-    # dets (same IEEE compares, ~6 numpy dispatches per region avoided)
-    rcx_l, rcy_l = rcx.tolist(), rcy.tolist()
-    n_raw = len(rcx_l)
-    for reg in region_boxes.tolist():
-        rx0, ry0, rx1, ry1 = reg
-        nw, nh = rx1 - rx0 + 2 * _PAD, ry1 - ry0 + 2 * _PAD
-        mine = [
-            j for j in range(n_raw)
-            if rx0 <= rcx_l[j] <= rx1 and ry0 <= rcy_l[j] <= ry1
-        ]
-        if not mine:
-            continue
-        shift = np.array([rx0, ry0, rx0, ry0]) - _PAD
-        crop = raw_boxes[mine] - shift
-        boxes = kernels.merge_det_boxes(crop[kernels.bubble_pass(crop)])
-        if len(masks):
-            adj = masks - shift
-            ok = ~(
-                (adj[:, 2] < 0) | (adj[:, 3] < 0) | (adj[:, 0] > nw) | (adj[:, 1] > nh)
-            )
-            adj = adj[ok]
-            if len(adj):  # reference: `if mfd_res:` (paddle_ocr.py:414)
-                boxes = kernels.split_by_masks(boxes, adj)
-        # tiny-group inner loop on Python floats (identical IEEE doubles,
-        # ~5µs numpy dispatch per flatnonzero/lexsort avoided per box)
-        ccx = ((crop[:, 0] + crop[:, 2]) / 2.0).tolist()
-        ccy = ((crop[:, 1] + crop[:, 3]) / 2.0).tolist()
-        mine_l = mine
-        m = len(mine_l)
-        sx, sy = float(shift[0]), float(shift[1])
-        for b in np.asarray(boxes).tolist():
-            b0, b1, b2, b3 = b
-            cons = [
-                j for j in range(m)
-                if b0 <= ccx[j] <= b2 and b1 <= ccy[j] <= b3
-            ]
-            cons.sort(key=lambda j: (ccx[j], j))  # (center_x, det_idx)
-            if cons:
-                s = 0.0
-                for j in cons:
-                    s += scores_list[mine_l[j]]
-                score = s / len(cons)
-            else:
-                score = 0.0
-            if score < schema.DROP_SCORE:
-                continue
-            out_boxes.append([b0 + sx, b1 + sy, b2 + sx, b3 + sy])
-            out_scores.append(round(score, 2))
-            out_contents.append(
-                " ".join(raw_contents[mine_l[j]] for j in cons)
-            )
-    return out_boxes, out_scores, out_contents
+        contents = angle_cls(contents)
+    rb = region_boxes
+
+    # region × raw centre containment, in page coordinates
+    pr, pw = kernels.segment_pairs(region_page, raw_page, n_pages)
+    cx = (raw_boxes[pw, 0] + raw_boxes[pw, 2]) / 2.0
+    cy = (raw_boxes[pw, 1] + raw_boxes[pw, 3]) / 2.0
+    hit = (rb[pr, 0] <= cx) & (cx <= rb[pr, 2]) & (rb[pr, 1] <= cy) & (cy <= rb[pr, 3])
+    pr, pw = pr[hit], pw[hit]  # region-major, raws in det_idx order
+    if len(pr) == 0:
+        return none
+    shift = rb[:, [0, 1, 0, 1]] - _PAD
+    crop = raw_boxes[pw] - shift[pr]
+
+    # masks in crop space, dropped when wholly outside the padded crop
+    mr, mm = kernels.segment_pairs(region_page, mask_page, n_pages)
+    adj = masks[mm] - shift[mr]
+    nw = rb[:, 2] - rb[:, 0] + 2 * _PAD
+    nh = rb[:, 3] - rb[:, 1] + 2 * _PAD
+    ok = ~((adj[:, 2] < 0) | (adj[:, 3] < 0) | (adj[:, 0] > nw[mr]) | (adj[:, 1] > nh[mr]))
+    adj, mr = adj[ok], mr[ok]
+
+    # sequential folds, one region at a time, on Python-float rows
+    regions = np.arange(len(rb) + 1)
+    raw_at = np.searchsorted(pr, regions).tolist()
+    mask_at = np.searchsorted(mr, regions).tolist()
+    crop_rows, adj_rows = crop.tolist(), adj.tolist()
+    merged: list = []
+    merged_n: list[int] = []
+    folded = np.unique(pr)
+    for r in folded.tolist():
+        rows = crop_rows[raw_at[r]:raw_at[r + 1]]
+        boxes = kernels.merge_det_boxes([rows[i] for i in kernels.bubble_pass(rows)])
+        # reference: `if mfd_res:` (paddle_ocr.py:414)
+        boxes = kernels.split_by_masks(boxes, adj_rows[mask_at[r]:mask_at[r + 1]])
+        merged += boxes
+        merged_n.append(len(boxes))
+    mreg = np.repeat(folded, merged_n)
+    mb = np.array(merged, dtype=np.float64).reshape(-1, 4)
+
+    # cons: the region's raws whose crop-space centre lies in the box
+    ccx = (crop[:, 0] + crop[:, 2]) / 2.0
+    ccy = (crop[:, 1] + crop[:, 3]) / 2.0
+    bi, pi = kernels.segment_pairs(mreg, pr, len(rb))
+    x, y = ccx[pi], ccy[pi]
+    inside = (mb[bi, 0] <= x) & (x <= mb[bi, 2]) & (mb[bi, 1] <= y) & (y <= mb[bi, 3])
+    bi, pi = bi[inside], pi[inside]
+    o = np.lexsort((pi, ccx[pi], bi))  # (center_x, det_idx) within a box
+    bi, pi = bi[o], pi[o]
+    cnt = np.bincount(bi, minlength=len(mb))
+    start = np.cumsum(cnt) - cnt
+    total = _seq_segment_sum(raw_scores[pw[pi]], start, cnt)
+    score = np.divide(total, cnt, out=np.zeros(len(mb)), where=cnt > 0)
+    keep = ~(score < schema.DROP_SCORE)
+
+    joined = [contents[j] for j in pw[pi].tolist()]
+    out_contents = [
+        " ".join(joined[s:s + c])
+        for s, c in zip(start[keep].tolist(), cnt[keep].tolist())
+    ]
+    out_scores = [round(v, 2) for v in score[keep].tolist()]
+    out_boxes = mb[keep] + shift[mreg[keep]]
+    return out_boxes, out_scores, out_contents, region_page[mreg[keep]]
 
 
 def _ocr_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel over a salted-conversation group: iterates the
-    group's (turn, page) slices via numpy boundaries (one pandas frame per
-    GROUP is applyInPandas' own overhead — keep groups coarse, work in
-    arrays)."""
+    """applyInPandas kernel over a salted-conversation group: one
+    ``ocr_page_arrays`` pass over all of the group's (turn, page) slices
+    (one pandas frame per GROUP is applyInPandas' own overhead — keep
+    groups coarse, work in arrays)."""
+    cols = [f.name for f in schema.DETECTIONS.fields]
     srt = pdf.sort_values(
         ["turn_idx", "page_seq", "branch", "det_idx"], kind="stable"
     )
@@ -132,50 +172,46 @@ def _ocr_group(pdf: pd.DataFrame) -> pd.DataFrame:
     score = srt["score"].to_numpy(np.float64)
     content = srt["content"].to_numpy(object)
     cat = srt["category"].to_numpy(object)
-    pno = srt["page_no"].to_numpy(np.int64)
-    pw = srt["page_w"].to_numpy(np.float64)
-    ph = srt["page_h"].to_numpy(np.float64)
-    conv = pdf["conv_id"].iat[0]
+    if len(turn) == 0:
+        return pd.DataFrame(columns=cols)
+    first = np.r_[True, (turn[1:] != turn[:-1]) | (pseq[1:] != pseq[:-1])]
+    page = np.cumsum(first) - 1
+    first = np.flatnonzero(first)
 
-    key = turn * (pseq.max() + 1 if len(pseq) else 1) + pseq
-    bounds = np.r_[0, np.flatnonzero(key[1:] != key[:-1]) + 1, len(key)]
-    out = []
-    region_set = frozenset(schema.OCR_REGION_CLASSES)
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        pb = branch[s:e]
-        pcat = cat[s:e]
-        regions = np.array(
-            [i for i in range(len(pb)) if pb[i] == 0 and pcat[i] in region_set],
-            dtype=np.int64,
-        )
-        # within-page rows are sorted by (branch, det_idx): branch-0 rows
-        # are in det_idx order == det_order order for regions; raws sorted
-        # by det_idx as the fake detector requires (DESIGN.md §2)
-        if len(regions):
-            regions = regions[np.argsort(dord[s:e][regions], kind="stable")]
-        masks = np.flatnonzero(pb == 1)
-        raws = np.flatnonzero(pb == 2)
-        model = pb < 2
-        tboxes, tscores, tcontents = ocr_page_arrays(
-            boxes[s:e][regions],
-            boxes[s:e][masks],
-            boxes[s:e][raws],
-            score[s:e][raws],
-            [content[s + i] for i in raws],
-        )
-        if not tboxes:
-            continue
-        offset = int(dord[s:e][model].max()) + 1 if model.any() else 0
-        for i, b in enumerate(tboxes):
-            out.append(
-                (
-                    conv, int(turn[s]), int(pseq[s]), int(pno[s]),
-                    float(pw[s]), float(ph[s]), -1, offset + i, 2, "text",
-                    tscores[i], b[0], b[1], b[2], b[3], tcontents[i],
-                )
-            )
-    cols = [f.name for f in schema.DETECTIONS.fields]
-    return pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
+    regions = np.flatnonzero((branch == 0) & np.isin(cat, schema.OCR_REGION_CLASSES))
+    regions = regions[np.lexsort((dord[regions], page[regions]))]
+    # within a page rows are sorted by (branch, det_idx): raws come in
+    # det_idx order as the fake detector requires (DESIGN.md §2)
+    masks = np.flatnonzero(branch == 1)
+    raws = np.flatnonzero(branch == 2)
+    tboxes, tscores, tcontents, tpage = ocr_page_arrays(
+        boxes[regions], boxes[masks], boxes[raws], score[raws],
+        content[raws].tolist(),
+        region_page=page[regions], mask_page=page[masks], raw_page=page[raws],
+    )
+    if len(tpage) == 0:
+        return pd.DataFrame(columns=cols)
+    # OCR spans continue det_order after the page's model dets
+    offset = np.full(len(first), -1, np.int64)
+    model = branch < 2
+    np.maximum.at(offset, page[model], dord[model])
+    nth = np.arange(len(tpage)) - np.searchsorted(tpage, tpage)
+    row = srt.iloc[first[tpage]]
+    return pd.DataFrame({
+        "conv_id": pdf["conv_id"].iat[0],
+        "turn_idx": row["turn_idx"].to_numpy(np.int64),
+        "page_seq": row["page_seq"].to_numpy(np.int64),
+        "page_no": row["page_no"].to_numpy(np.int64),
+        "page_w": row["page_w"].to_numpy(np.float64),
+        "page_h": row["page_h"].to_numpy(np.float64),
+        "det_idx": -1,
+        "det_order": offset[tpage] + 1 + nth,
+        "branch": 2,
+        "category": "text",
+        "score": tscores,
+        "x0": tboxes[:, 0], "y0": tboxes[:, 1], "x1": tboxes[:, 2], "y1": tboxes[:, 3],
+        "content": tcontents,
+    })[cols]
 
 
 def ocr_crop_assign(detections: DataFrame) -> DataFrame:

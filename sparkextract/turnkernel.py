@@ -1,24 +1,33 @@
-"""Per-turn extraction kernel for the fused pipeline (fused.py).
+"""Batch extraction kernel for the fused pipeline (fused.py).
 
 Runs the post-detection stages — MFR (F1), OCR merge (O2/O7/J2), span→block
 fill (J1), line/paragraph assembly (O3/A2), reading order (O1), markdown
-emit (A3/A4) — for ONE turn, on plain numpy arrays (no per-group pandas
-frames: at ~tens of detections per page, frame construction costs more
-than the work). Shares the fold kernels with the staged pipeline
-(ocr.ocr_page_arrays, kernels.merge_para, kernels.latex_rm_whitespace) —
-one tested implementation of each reference fold.
+emit (A3/A4) — for EVERY turn of one Arrow batch in one pass over plain
+numpy arrays. Per-turn and per-page calls would repeat dozens of tiny
+numpy dispatches ~3k times per batch, which costs more than the work, so:
+
+- one lexsort of all detection rows by (conv, turn, page_no, page_seq,
+  det order) gives the turn and page segments;
+- F1 runs once per distinct formula string of the batch;
+- OCR containment, the J1 fill and the O1 keys compare same-page pair
+  arrays built from per-page counts (``kernels.segment_pairs``), never a
+  dense matrix across the batch;
+- only the genuinely sequential folds run per group: bubble pass, line
+  merge and mask split per OCR region (``ocr.ocr_page_arrays``), and
+  paragraph assembly per block (``kernels.merge_para``).
 
 Why this exists: every turn is independent (SURVEY.md §3.1), so the
 scale-optimal plan is parse+extract fused in one narrow mapInPandas —
 zero shuffles before the final (conv_id, turn_idx) ordering window. The
 staged pipeline (pipeline.extract) keeps each operator as a first-class
-relational op; this kernel is the production fast path. Both must match
-tests/oracle.py exactly.
+relational op and shares ``ocr_page_arrays``; this kernel is the
+production fast path. Both must match tests/oracle.py exactly.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from . import kernels, schema
 from .ocr import ocr_page_arrays
@@ -26,182 +35,168 @@ from .ocr import ocr_page_arrays
 _SPAN_CATS = frozenset(["inline", "text", "isolated"])
 _FIX = frozenset(schema.FIX_BLOCK_TYPES)
 _OCR_REGION = frozenset(schema.OCR_REGION_CLASSES)
+_PLAIN = frozenset(["plain text", "figure_caption", "table_caption"])
 
 
-def _fill_first_wins(sboxes: np.ndarray, bboxes: np.ndarray) -> np.ndarray:
-    """J1 (merge_blocks_and_spans.py:111-155): for each span, index of the
-    earliest block with overlap_area/span_area > 0.6, else -1. Vectorized
-    (n_spans × n_blocks) — both are tens per page."""
-    if len(sboxes) == 0 or len(bboxes) == 0:
-        return np.full(len(sboxes), -1, dtype=np.int64)
-    if len(sboxes) * len(bboxes) <= 64:
-        # tiny-page fast path: same IEEE arithmetic on Python floats,
-        # first-qualifying-block scan ≡ argmax of the hit matrix
-        srows = sboxes.tolist()
-        brows = bboxes.tolist()
-        out = []
-        for s in srows:
-            area = (s[2] - s[0]) * (s[3] - s[1])
-            hit = -1
-            if area > 0:
-                for bi, b in enumerate(brows):
-                    ox = min(s[2], b[2]) - max(s[0], b[0])
-                    oy = min(s[3], b[3]) - max(s[1], b[1])
-                    if ox >= 0 and oy >= 0 and (ox * oy) / area > schema.FILL_RATIO:
-                        hit = bi
-                        break
-            out.append(hit)
-        return np.asarray(out, dtype=np.int64)
-    sx0, sy0, sx1, sy1 = (sboxes[:, i][:, None] for i in range(4))
-    bx0, by0, bx1, by1 = (bboxes[:, i][None, :] for i in range(4))
-    ox = np.minimum(sx1, bx1) - np.maximum(sx0, bx0)
-    oy = np.minimum(sy1, by1) - np.maximum(sy0, by0)
+def _fill_first_wins(sboxes: np.ndarray, span_page: np.ndarray,
+                     bboxes: np.ndarray, block_page: np.ndarray,
+                     n_pages: int) -> np.ndarray:
+    """J1 (merge_blocks_and_spans.py:111-155) for a whole batch: for each
+    span, the index into ``bboxes`` of the earliest same-page block with
+    overlap_area/span_area > FILL_RATIO, else -1. ``block_page`` must be
+    sorted; blocks keep their page order."""
+    out = np.full(len(sboxes), -1, dtype=np.int64)
+    si, bi = kernels.segment_pairs(span_page, block_page, n_pages)
+    s, b = sboxes[si], bboxes[bi]
+    ox = np.minimum(s[:, 2], b[:, 2]) - np.maximum(s[:, 0], b[:, 0])
+    oy = np.minimum(s[:, 3], b[:, 3]) - np.maximum(s[:, 1], b[:, 1])
     inter = np.where((ox >= 0) & (oy >= 0), ox * oy, 0.0)
-    area = np.broadcast_to((sx1 - sx0) * (sy1 - sy0), inter.shape)
+    area = (s[:, 2] - s[:, 0]) * (s[:, 3] - s[:, 1])
     ratio = np.divide(inter, area, out=np.zeros_like(inter), where=area > 0)
     hit = ratio > schema.FILL_RATIO
-    return np.where(hit.any(axis=1), hit.argmax(axis=1), -1)
+    si, bi = si[hit], bi[hit]
+    # pairs are span-major with blocks ascending: a span's first hit is
+    # its lowest qualifying block
+    first = np.r_[True, si[1:] != si[:-1]] if len(si) else np.zeros(0, bool)
+    out[si[first]] = bi[first]
+    return out
+
+
+def _in(cats: np.ndarray, members) -> np.ndarray:
+    """Category membership: one hash pass, then a lookup per distinct value."""
+    codes, uniq = pd.factorize(cats)
+    return np.array([u in members for u in uniq], dtype=bool)[codes]
+
+
+def _bounds(sorted_ids: np.ndarray, n: int) -> list[int]:
+    """Start offsets of ids 0..n in a sorted id array (n+1 entries)."""
+    return np.searchsorted(sorted_ids, np.arange(n + 1)).tolist()
 
 
 def run_turn_arrays(
-    page_list: list[tuple[int, int]],  # (page_no, page_seq) marker rows
-    page_seq: np.ndarray,  # per-det arrays, any order within a page=det_order
-    branch: np.ndarray,
+    conv: np.ndarray,  # object; per parsed row, any row order
+    turn: np.ndarray,
+    page_no: np.ndarray,
+    page_seq: np.ndarray,
+    branch: np.ndarray,  # -1 = @page marker row
     det_order: np.ndarray,
+    det_idx: np.ndarray,  # payload order — raw-det tiebreak (paddle_ocr.py)
     category: np.ndarray,  # object
     score: np.ndarray,
     boxes: np.ndarray,  # (n,4)
     content: np.ndarray,  # object
-    det_idx: np.ndarray,  # payload order — raw-det tiebreak (paddle_ocr.py)
-    f1_cache: dict | None = None,  # per-batch memo for the F1 fixpoint
-) -> tuple[str, list[tuple]]:
-    """One turn's detection arrays → (main_text, spans list of tuples).
+) -> tuple[list, list, list[str], list[list[dict]]]:
+    """One batch's parsed detection rows → per turn (conv_ids, turn_idxs,
+    main_texts, spans), spans as lists of dicts with keys type, x0, y0,
+    x1, y1, content, score."""
+    if len(branch) == 0:
+        return [], [], [], []
+    # --- segments: rows by (conv, turn, A4 page order, det order); raws
+    # by det_idx, the order ocr_page_arrays requires. A page's marker
+    # (det_order -1) sorts first, so counting markers numbers the pages.
+    conv_code = pd.factorize(conv, sort=True)[0]
+    is_raw = branch == 2
+    o = np.lexsort((np.where(is_raw, det_idx, det_order), is_raw,
+                    page_seq, page_no, turn, conv_code))
+    conv, turn, branch = conv[o], turn[o], branch[o]
+    category, score, boxes, content = category[o], score[o], boxes[o], content[o]
+    conv_code = conv_code[o]
+    marker = branch == -1
+    page = np.cumsum(marker) - 1
+    n_pages = int(marker.sum())
+    newturn = np.r_[True, (conv_code[1:] != conv_code[:-1]) | (turn[1:] != turn[:-1])]
+    turn_of_page = (np.cumsum(newturn) - 1)[marker]
+    n_turns = int(newturn.sum())
 
-    ``f1_cache`` (optional, supplied per Arrow batch by the fused
-    engine) memoizes ``latex_rm_whitespace`` — a pure string→string
-    fixpoint of ~10 regex passes — for formula strings repeated within
-    the batch; bounded by the batch's distinct formulas, dropped with
-    the batch."""
-    mds: list[str] = []
-    out_spans: list[tuple] = []
-    order_pages = sorted(page_list)  # (page_no, page_seq): A4 page order
-    for _pn, ps in order_pages:
-        sel = np.flatnonzero(page_seq == ps)
-        if len(sel) == 0:
-            mds.append("")
-            continue
-        sel = sel[np.argsort(det_order[sel], kind="stable")]
-        pb = branch[sel]
-        pcat = category[sel]
-        pscore = score[sel]
-        pbox = boxes[sel]
-        pcontent = content[sel].copy()
-        pord = det_order[sel]
-        pidx = det_idx[sel]
+    # --- F1 (MFR) once per distinct formula string of the batch
+    formula = np.flatnonzero(branch == 1)
+    if len(formula):
+        vals = content[formula].tolist()
+        memo = {s: kernels.latex_rm_whitespace(s) for s in dict.fromkeys(vals)}
+        content = content.copy()
+        content[formula] = np.array([memo[s] for s in vals], dtype=object)
 
-        # MFR (F1) on the formula branch
-        for k in np.flatnonzero(pb == 1):
-            c = pcontent[k]
-            if f1_cache is None:
-                pcontent[k] = kernels.latex_rm_whitespace(c)
-            else:
-                v = f1_cache.get(c)
-                if v is None:
-                    v = kernels.latex_rm_whitespace(c)
-                    f1_cache[c] = v
-                pcontent[k] = v
+    # --- OCR merge: regions = OCR-able layout dets (pdf2markdown.py:209)
+    region = np.flatnonzero((branch == 0) & _in(category, _OCR_REGION))
+    mask = formula
+    raw = np.flatnonzero(branch == 2)
+    tboxes, tscores, tcontents, tpage = ocr_page_arrays(
+        boxes[region], boxes[mask], boxes[raw], score[raw], content[raw],
+        region_page=page[region], mask_page=page[mask], raw_page=page[raw],
+    )
 
-        # OCR merge: regions = OCR-able layout dets (pdf2markdown.py:209)
-        model = pb < 2
-        # raws MUST be in det_idx (payload) order: ocr_page_arrays' contract —
-        # bubble_pass tiebreak + cons content-join lexsort follow input order
-        # (paddle_ocr.py sorted_boxes / oracle run_page raws). det_order for
-        # branch 2 is score-desc, so re-sort here (staged path: ocr.py:86).
-        raws = np.flatnonzero(pb == 2)
-        raws = raws[np.argsort(pidx[raws], kind="stable")]
-        reg_sel = np.array(
-            [i for i in range(len(pb))
-             if pb[i] == 0 and pcat[i] in _OCR_REGION],
-            dtype=np.int64,
+    # --- final page dets: model dets in det_order, then OCR text spans
+    model = np.flatnonzero((branch == 0) | (branch == 1))
+    n_ocr = len(tpage)
+    fpage = np.r_[page[model], tpage]
+    fo = np.argsort(fpage, kind="stable")
+    fpage = fpage[fo]
+    fcat = np.r_[category[model], np.full(n_ocr, "text", dtype=object)][fo]
+    fbox = np.concatenate([boxes[model], tboxes.reshape(-1, 4)])[fo]
+    fcontent = np.r_[content[model], np.array(tcontents, dtype=object)][fo]
+    fscore = np.r_[score[model], np.asarray(tscores, dtype=np.float64)][fo]
+
+    # spans pool + block list (pdf2markdown.py:272-298); a row's position
+    # in this final order is its span-pool order
+    iso = fcat == "isolated"
+    span_row = _in(fcat, _SPAN_CATS)
+    spans = np.flatnonzero(span_row)
+    blocks = np.flatnonzero(~span_row | iso)
+    bcat = fcat[blocks].copy()
+    bcat[iso[blocks]] = "isolate_formula"
+    bfix = _in(bcat, _FIX)
+    fixed = blocks[bfix]
+
+    # --- J1 fill, then A2 paragraph text per fixed block
+    assign = _fill_first_wins(fbox[spans], fpage[spans], fbox[fixed],
+                              fpage[fixed], n_pages)
+    got = assign >= 0
+    by_block = np.argsort(assign[got], kind="stable")
+    mine = spans[got][by_block]
+    at = _bounds(assign[got][by_block], len(fixed))
+    m_cat, m_content = fcat[mine].tolist(), fcontent[mine].tolist()
+    m_box = fbox[mine]
+    interline = (bcat[bfix] == "isolate_formula").tolist()
+    fixed_text = [""] * len(fixed)
+    for k in np.flatnonzero(np.diff(at)).tolist():
+        s, e = at[k], at[k + 1]
+        fixed_text[k] = kernels.merge_para(
+            m_cat[s:e], m_content[s:e], m_box[s:e], mine[s:e],
+            is_interline=interline[k],
         )
-        mask_sel = np.flatnonzero(pb == 1)
-        tboxes, tscores, tcontents = ocr_page_arrays(
-            pbox[reg_sel], pbox[mask_sel],
-            pbox[raws], pscore[raws], [pcontent[i] for i in raws],
-        )
-        offset = int(pord[model].max()) + 1 if model.any() else 0
+    btext = np.full(len(blocks), "", dtype=object)
+    btext[bfix] = np.array(fixed_text, dtype=object)
 
-        # final page dets = model dets + OCR text spans, in det_order
-        n_model = int(model.sum())
-        n = n_model + len(tboxes)
-        cats = np.empty(n, dtype=object)
-        fbox = np.empty((n, 4), dtype=np.float64)
-        fcontent = np.empty(n, dtype=object)
-        fscore = np.empty(n, dtype=np.float64)
-        ford = np.empty(n, dtype=np.int64)
-        mi = np.flatnonzero(model)
-        cats[:n_model] = pcat[mi]
-        fbox[:n_model] = pbox[mi]
-        fcontent[:n_model] = pcontent[mi]
-        fscore[:n_model] = pscore[mi]
-        ford[:n_model] = pord[mi]
-        for j in range(len(tboxes)):
-            cats[n_model + j] = "text"
-            fbox[n_model + j] = tboxes[j]
-            fcontent[n_model + j] = tcontents[j]
-            fscore[n_model + j] = tscores[j]
-            ford[n_model + j] = offset + j
+    # --- O1 reading order: untouched before fixed on ties, then pool
+    # order (DESIGN §3); one lexsort for every block of the batch
+    bbox = fbox[blocks]
+    key = bbox[:, 1] * schema.READ_ORDER_W + bbox[:, 0]
+    bpage = fpage[blocks]
+    ro = np.lexsort((blocks, bfix, key, bpage))
+    cats = bcat[ro].tolist()
+    texts = btext[ro].tolist()
+    bpage = bpage[ro]
 
-        # spans pool + block list (pdf2markdown.py:272-298)
-        span_idx: list[int] = []
-        block_rows: list[tuple[str, int]] = []
-        for i in range(n):
-            c = cats[i]
-            if c in _SPAN_CATS:
-                span_idx.append(i)
-                if c == "isolated":
-                    block_rows.append(("isolate_formula", i))
-            else:
-                block_rows.append((c, i))
-        span_idx = np.asarray(span_idx, dtype=np.int64)
-        is_fixed = np.array([c in _FIX for c, _ in block_rows], dtype=bool)
-        fix_pos = np.flatnonzero(is_fixed)
-        bidx = np.array([i for _, i in block_rows], dtype=np.int64)
+    # --- A3 page markdown, A4 "\n\n" page join per turn
+    piece = [
+        "\n# " + t + "\n" if c == "title"
+        else "\n" + t + "\n" if c == "isolate_formula"
+        else " " + t + " " if c in _PLAIN
+        else ""
+        for c, t in zip(cats, texts)
+    ]
+    pat = _bounds(bpage, n_pages)
+    page_md = ["".join(piece[pat[p]:pat[p + 1]]) for p in range(n_pages)]
+    tat = _bounds(turn_of_page, n_turns)
+    main_text = ["\n\n".join(page_md[tat[t]:tat[t + 1]]) for t in range(n_turns)]
 
-        assign = _fill_first_wins(
-            fbox[span_idx],
-            fbox[bidx[fix_pos]] if len(fix_pos) else np.empty((0, 4)),
-        )
-        texts_by_block: dict[int, str] = {}
-        for k, fp in enumerate(fix_pos):
-            mine = span_idx[assign == k]
-            texts_by_block[int(fp)] = kernels.merge_para(
-                [cats[i] for i in mine],
-                [fcontent[i] for i in mine],
-                fbox[mine],
-                ford[mine],
-                is_interline=block_rows[fp][0] == "isolate_formula",
-            )
-
-        # O1 reading order: untouched first, then fixed, stable (DESIGN §3)
-        okeys = sorted(
-            (fbox[i][1] * schema.READ_ORDER_W + fbox[i][0],
-             1 if is_fixed[k] else 0, ford[i], k)
-            for k, (_c, i) in enumerate(block_rows)
-        )
-        md = ""
-        for _ok, _fx, _o, k in okeys:
-            c, i = block_rows[k]
-            text = texts_by_block.get(k, "")
-            if c == "title":
-                md += "\n# " + text + "\n"
-            elif c == "isolate_formula":
-                md += "\n" + text + "\n"
-            elif c in ("plain text", "figure_caption", "table_caption"):
-                md += " " + text + " "
-            out_spans.append(
-                (c, float(fbox[i][0]), float(fbox[i][1]), float(fbox[i][2]),
-                 float(fbox[i][3]), text, float(fscore[i]))
-            )
-        mds.append(md)
-    return "\n\n".join(mds), out_spans
+    x0, y0, x1, y1 = bbox[ro].T.tolist()
+    recs = [
+        {"type": c, "x0": a, "y0": b, "x1": d, "y1": e, "content": t, "score": sc}
+        for c, a, b, d, e, t, sc in zip(cats, x0, y0, x1, y1, texts,
+                                        fscore[blocks][ro].tolist())
+    ]
+    bat = [pat[p] for p in tat]  # turn t's blocks: pages tat[t]..tat[t+1]
+    turn_spans = [recs[bat[t]:bat[t + 1]] for t in range(n_turns)]
+    first = np.flatnonzero(newturn)
+    return conv[first].tolist(), turn[first].tolist(), main_text, turn_spans

@@ -27,8 +27,8 @@ def bboxes(draw, max_n=12):
 @settings(max_examples=200, deadline=None)
 def test_bubble_pass_prop(boxes):
     want = oracle.sorted_boxes([list(b) for b in boxes])
-    arr = np.array(boxes, dtype=float).reshape(-1, 4)
-    got = arr[kernels.bubble_pass(arr)].tolist() if len(arr) else []
+    rows = [[float(v) for v in b] for b in boxes]
+    got = [rows[i] for i in kernels.bubble_pass(rows)]
     assert got == want
 
 
@@ -37,7 +37,7 @@ def test_bubble_pass_prop(boxes):
 def test_merge_det_boxes_prop(boxes):
     srt = oracle.sorted_boxes([list(b) for b in boxes])
     want = oracle.merge_det_boxes([list(b) for b in srt])
-    got = kernels.merge_det_boxes(np.array(srt, dtype=float).reshape(-1, 4)).tolist()
+    got = kernels.merge_det_boxes([[float(v) for v in b] for b in srt])
     assert got == want
 
 
@@ -47,10 +47,8 @@ def test_split_by_masks_prop(boxes, masks):
     want = oracle.update_det_boxes(
         [list(b) for b in boxes], [list(m) for m in masks]
     )
-    got = kernels.split_by_masks(
-        np.array(boxes, dtype=float).reshape(-1, 4),
-        np.array(masks, dtype=float).reshape(-1, 4),
-    ).tolist()
+    got = kernels.split_by_masks([[float(v) for v in b] for b in boxes],
+                                 [[float(v) for v in m] for m in masks])
     assert got == want
 
 
